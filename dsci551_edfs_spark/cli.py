@@ -31,17 +31,20 @@ Intentional divergence: `getPartitionLocations` returns
 to report; `files` lists the physical parquet files backing the partition.
 
 Run: ``python -m dsci551_edfs_spark.cli [--warehouse DIR]`` for a REPL, or
-pass a single command after ``--``.
+pass a single command after ``--``. The warehouse defaults to
+``warehouse/`` under the scratch root (`memo.SCRATCH`).
 """
 
 from __future__ import annotations
 
 import json
+import os
 import shlex
 import sys
 
 from pyspark.sql import SparkSession
 
+from . import memo as MEMO
 from .catalog import EdfsCatalog
 from .operators import aggregates as AGG
 from .sources import ingest as ING
@@ -235,9 +238,12 @@ def repl(shell: EdfsShell, input_fn=input, write=None) -> int:
         write(json.dumps(out, indent=2, default=str) + "\n")
 
 
+DEFAULT_WAREHOUSE = os.path.join(MEMO.SCRATCH, "warehouse")
+
+
 def main(argv: list[str] | None = None) -> int:
     argv = sys.argv[1:] if argv is None else argv
-    warehouse = "/root/repo/.scratch/warehouse"
+    warehouse = DEFAULT_WAREHOUSE
     if "--warehouse" in argv:
         i = argv.index("--warehouse")
         warehouse = argv[i + 1]

@@ -37,7 +37,11 @@ from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
+# the one scratch root (memo store, query temp dirs, CLI warehouse):
+# $SPARK_GRAFT_SCRATCH, else .scratch/ next to this checkout's package,
+# so two checkouts never share or wipe each other's memos
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", os.path.join(_REPO, ".scratch"))
 
 # build seconds observed by THIS process, keyed by memo tag; 0.0 when the
 # artifact was already on disk. bench.py reads this to itemize

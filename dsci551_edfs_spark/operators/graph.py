@@ -1,26 +1,41 @@
-"""Iterative graph analytics on DataFrames: integer-exact PageRank.
+"""Iterative graph analytics on DataFrames.
 
-Connected components (HashMin BSP) lives in pipeline/dedup.py; this module
-adds the other canonical iterative algorithm. The twist that makes it
-ORACLE-CHECKABLE — rare for iterative float algorithms — is integer
-arithmetic throughout: ranks live in micro-units (1e6 = mass 1.0) and
-every division is floor division, so the result is bit-identical on any
-engine and any partitioning, with zero FP accumulation-order dependence
-(same design as pipeline/importance.py and pipeline/lm.py).
+Fixpoint kernels — `connected_components` and `bfs_hops` — return the
+exact fixpoint or raise; neither ever truncates. Each has two paths:
 
-Update rule per iteration (all integer ops):
+- **small**: the symmetric edge frame is checkpointed, counted and, when
+  it has at most ``COLLECT_CAP`` rows, collected; a driver union-find
+  (CC) or queue BFS computes the answer with no further Spark job.
+- **distributed**, past the cap: CC runs the alternating
+  large-star/small-star rounds (Kiveris et al., "Connected Components in
+  MapReduce and Beyond", SoCC 2014), O(log d) rounds on any diameter;
+  BFS runs BSP frontier relaxation, one round per hop of the source's
+  eccentricity. A loop with no fixpoint after ``MAX_ROUNDS`` rounds
+  raises ``RuntimeError``.
+
+Both paths see the same node set: every id in the input edges, including
+ids that appear only in self-loops.
+
+Bounded-iteration operators — `pagerank_micro`, `label_propagation`,
+`kcore_peel` — run a fixed round count by contract. PageRank is
+ORACLE-CHECKABLE because its arithmetic is integer throughout: ranks
+live in micro-units (1e6 = mass 1.0) and every division is floor
+division, so the result is bit-identical on any engine and any
+partitioning (same design as pipeline/importance.py and
+pipeline/lm.py). Update rule per iteration:
 
     contrib(u)  = pr(u) // outdeg(u)
     pr'(v)      = (15·SCALE) // (100·N)  +  (85·Σ contrib(u→v)) // 100
 
-Scale shape: each iteration is one shuffle of (dst, contrib) pairs
-grouped by destination — the textbook Pregel/GraphX message pattern; the
-rank vector is (node, long) rows, never collected. Iterations extend the
-lineage, so the loop localCheckpoints the rank vector every 5 rounds
-exactly like connected_components does.
+Each iteration is one shuffle of (dst, contrib) pairs grouped by
+destination — the Pregel/GraphX message pattern; the rank vector is
+(node, long) rows, never collected, and its lineage is cut every 5
+rounds.
 """
 
 from __future__ import annotations
+
+from collections import deque
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -30,6 +45,7 @@ __all__ = [
     "triangle_count",
     "clustering_coefficient",
     "label_propagation",
+    "connected_components",
     "bfs_hops",
     "neighbor_jaccard",
     "kcore_peel",
@@ -37,6 +53,12 @@ __all__ = [
 ]
 
 SCALE = 1_000_000
+
+# Small-path cap in symmetric edge rows, all collected to the driver.
+# Past it the distributed loop runs.
+COLLECT_CAP = 2_000_000
+# Round guard of both distributed loops.
+MAX_ROUNDS = 64
 
 
 def pagerank_micro(
@@ -319,74 +341,168 @@ def label_propagation(
     return labels
 
 
-def _bfs_collect_fallback(sym: DataFrame, source) -> DataFrame | None:
-    """Driver BFS over a SMALL (checkpointed, symmetric) edge frame, or
-    None when the edge count exceeds the same conf'd threshold the CC
-    collect fallback uses (`spark.dsci551.ccCollectEdgeThreshold`,
-    0 disables). Returns exactly the BSP fixpoint: (node, hops) for
-    REACHABLE nodes only, hops = unweighted shortest distance."""
-    from collections import deque
+def _symmetric(edges: DataFrame, a_col: str, b_col: str):
+    """``(sym, rows)``: the symmetric (src, dst) edge frame, checkpointed
+    so the edge generation upstream runs once, and its collected rows
+    when there are at most ``COLLECT_CAP`` of them (else None). Jobs: one
+    checkpoint, one count, one collect — the whole small path."""
+    sym = (
+        edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+        .union(edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
+        .localCheckpoint(eager=True)
+    )
+    if sym.count() > COLLECT_CAP:
+        return sym, None
+    return sym, sym.collect()
 
-    from ..pipeline.dedup import _CC_COLLECT_CONF, _CC_COLLECT_DEFAULT
 
-    spark = sym.sparkSession
-    try:
-        cap = int(spark.conf.get(_CC_COLLECT_CONF, str(_CC_COLLECT_DEFAULT)))
-    except Exception:
-        cap = _CC_COLLECT_DEFAULT
-    if cap <= 0 or sym.count() > cap:
-        return None
+def connected_components(
+    edges: DataFrame, src_col: str = "id_a", dst_col: str = "id_b"
+) -> DataFrame:
+    """Connected components of an undirected edge list: ``(node, label)``
+    for every node in the edges, ``label`` the minimum node id of its
+    component — the canonical representative dedup keeps.
+
+    Small path: min-rooted union-find with path compression, so each
+    root IS its component's min id. Distributed path: `_star_rounds`."""
+    sym, rows = _symmetric(edges, src_col, dst_col)
+    if rows is None:
+        return _star_rounds(sym)
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for u, v in rows:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    t = sym.schema[0].dataType.simpleString()
+    return sym.sparkSession.createDataFrame(
+        [(n, find(n)) for n in parent], f"node {t}, label {t}"
+    )
+
+
+def _star_rounds(sym: DataFrame) -> DataFrame:
+    """Alternating large-star/small-star rounds over each undirected edge
+    once (self-loops dropped, duplicates merged):
+
+    - **large-star**: per node u over its full (symmetric) neighborhood,
+      m = min(Γ(u) ∪ {u}); every strictly-larger neighbor v > u
+      re-attaches as (v, m).
+    - **small-star**: edges arrive child>parent-oriented from large-star;
+      per node u over its smaller neighbors Γ⁻(u), m = min(Γ⁻(u)); every
+      other small neighbor re-attaches as (v, m), plus (u, m).
+
+    Both stars strictly decrease the potential Σ height and the
+    alternation contracts component diameter geometrically: O(log d)
+    rounds, pinned in pytest at ≤ 12 for a 1024-node path. Per round:
+    two shuffle aggs + two shuffle joins on the CURRENT edge set, which
+    only shrinks; ``localCheckpoint`` cuts lineage every round; the
+    fixpoint test is a 2-scalar agg (count + hash-sum of the canonical
+    edge set), not a frame diff."""
+    E = (
+        sym.filter(F.col("src") < F.col("dst"))
+        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+    def _sig(e: DataFrame):
+        row = e.agg(
+            F.count("*").alias("n"),
+            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
+        ).first()
+        return row["n"], row["h"]
+
+    prev = _sig(E)
+    for _ in range(MAX_ROUNDS):
+        # large-star over the symmetric neighborhood
+        both = E.union(E.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        mins = both.groupBy("u").agg(F.min("v").alias("mn"))
+        m = F.least(F.col("u"), F.col("mn"))
+        ls = (
+            both.join(mins, "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), m.alias("v"))
+            .distinct()
+            .localCheckpoint(eager=True)  # 2 consumers: mins2 + the join
+        )
+        # small-star: every edge now has v < u (large-star emits (bigger,
+        # component-ward min)), so Γ⁻(u) is exactly the v side
+        mins2 = ls.groupBy("u").agg(F.min("v").alias("mn"))
+        E = (
+            ls.join(mins2, "u")
+            .filter(F.col("v") != F.col("mn"))
+            .select(F.col("v").alias("u"), F.col("mn").alias("v"))
+            .unionByName(mins2.select("u", F.col("mn").alias("v")))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        cur = _sig(E)
+        if cur == prev:
+            break
+        prev = cur
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint in {MAX_ROUNDS} rounds"
+        )
+    # the converged edge set is a star forest (node, component-min);
+    # roots, and ids seen only in self-loops, label themselves
+    loops = sym.filter(F.col("src") == F.col("dst")).select(
+        F.col("src").alias("node"), F.col("src").alias("label")
+    )
+    return (
+        E.select(F.col("u").alias("node"), F.col("v").alias("label"))
+        .unionByName(E.select(F.col("v").alias("node"), F.col("v").alias("label")))
+        .unionByName(loops)
+        .groupBy("node")
+        .agg(F.min("label").alias("label"))
+    )
+
+
+def bfs_hops(
+    edges: DataFrame, source, a_col: str = "a", b_col: str = "b"
+) -> DataFrame:
+    """Unweighted shortest-path hops from ``source`` over an undirected
+    edge list: ``(node, hops)`` for every REACHABLE node (unreachable
+    nodes are absent — the caller left-joins if it wants nulls).
+
+    Small path: a driver queue BFS. Distributed path: BSP frontier
+    relaxation — each round propagates ``min(dist)+1`` to neighbors
+    until (reached, Σhops) stops changing. Rounds = source eccentricity
+    + 1; `localCheckpoint` cuts the label lineage per round. Integer-exact → a bounded recursive-CTE
+    oracle states the same hop counts.
+    """
+    sym, rows = _symmetric(edges, a_col, b_col)
+    if rows is None:
+        return _bfs_rounds(sym, source)
     adj: dict = {}
-    for row in sym.collect():
-        adj.setdefault(row[0], []).append(row[1])
+    for u, v in rows:
+        adj.setdefault(u, []).append(v)
     hops = {source: 0} if source in adj else {}
-    dq = deque([source]) if source in adj else deque()
+    dq = deque(hops)
     while dq:
         u = dq.popleft()
         for v in adj[u]:
             if v not in hops:
                 hops[v] = hops[u] + 1
                 dq.append(v)
-    node_t = sym.schema[0].dataType.simpleString()
-    return spark.createDataFrame(
-        sorted(hops.items()), f"node {node_t}, hops long"
+    t = sym.schema[0].dataType.simpleString()
+    return sym.sparkSession.createDataFrame(
+        sorted(hops.items()), f"node {t}, hops long"
     )
 
 
-def bfs_hops(
-    edges: DataFrame,
-    source,
-    a_col: str = "a",
-    b_col: str = "b",
-    max_iter: int = 40,
-) -> DataFrame:
-    """Unweighted shortest-path hops from ``source`` over an undirected
-    edge list: ``(node, hops)`` for every REACHABLE node (unreachable
-    nodes are absent — the caller left-joins if it wants nulls).
-
-    BSP frontier relaxation, the single-source little sibling of
-    `connected_components`: each round propagates ``min(dist)+1`` to
-    neighbors; distances only decrease, so an unchanged ``sum(dist)`` is
-    the fixpoint (one scalar agg per round). Rounds = source
-    eccentricity; `localCheckpoint` pins edges once and cuts the label
-    lineage per round. Integer-exact → a bounded recursive-CTE oracle
-    states the same hop counts.
-    """
-    sym = edges.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-    ).union(
-        edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-    ).localCheckpoint(eager=True)
-    # collect-when-small fallback (optimization r14 — the CC precedent,
-    # dedup._cc_collect_fallback, applied to the single-source case):
-    # counting the checkpointed edge RDD is one cheap job; when the
-    # edge set fits under the same conf'd threshold a driver BFS gives
-    # the identical (node, hops) table in zero loop rounds — vs 2 Spark
-    # jobs per eccentricity round. Past the guard, the BSP loop below
-    # runs unchanged (the 100 TB path).
-    small = _bfs_collect_fallback(sym, source)
-    if small is not None:
-        return small
+def _bfs_rounds(sym: DataFrame, source) -> DataFrame:
     dist = (
         sym.select(F.col("src").alias("node"))
         .distinct()
@@ -399,6 +515,7 @@ def bfs_hops(
         )
         .localCheckpoint(eager=True)
     )
+
     def state(d):
         # (reached, Σhops): reached grows monotonically, hops only
         # decrease — the pair is unchanged IFF the relaxation is a
@@ -409,7 +526,7 @@ def bfs_hops(
         return (r["n"], r["s"])
 
     prev = state(dist)
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         relax = (
             sym.join(dist, sym.dst == dist.node)
             .filter(F.col("hops").isNotNull())
@@ -430,6 +547,8 @@ def bfs_hops(
         if cur == prev:
             break
         prev = cur
+    else:
+        raise RuntimeError(f"bfs_hops: no fixpoint in {MAX_ROUNDS} rounds")
     return dist.filter(F.col("hops").isNotNull()).select("node", "hops")
 
 

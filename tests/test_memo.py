@@ -157,3 +157,42 @@ def test_spread_small_parallelizes_single_partition(spark, sf_dir):
         spark.sparkContext.defaultParallelism
     )
     assert spread_small(wide) is wide
+
+
+def test_scratch_root_is_one_env_derived_path(tmp_path):
+    """memo.SCRATCH, queries_base.SCRATCH and the CLI's default warehouse
+    all sit under $SPARK_GRAFT_SCRATCH when it is set (a fresh
+    interpreter, since the roots are read at import), and under the
+    checkout's own .scratch/ when it is not."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = (
+        "import json\n"
+        "from dsci551_edfs_spark import cli, memo, queries_base\n"
+        "print(json.dumps([memo.SCRATCH, queries_base.SCRATCH,"
+        " cli.DEFAULT_WAREHOUSE]))\n"
+    )
+
+    def roots(env):
+        out = subprocess.run(
+            [sys.executable, "-c", probe],
+            cwd=repo,
+            env=env,
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout
+        return json.loads(out.strip().splitlines()[-1])
+
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_SCRATCH"}
+    root = str(tmp_path / "scratch_root")
+    assert roots({**env, "SPARK_GRAFT_SCRATCH": root}) == [
+        root,
+        root,
+        os.path.join(root, "warehouse"),
+    ]
+    default = os.path.join(repo, ".scratch")
+    assert roots(env) == [default, default, os.path.join(default, "warehouse")]

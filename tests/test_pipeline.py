@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dsci551_edfs_spark.functions import text as TXT
+from dsci551_edfs_spark.operators import graph as G
 from dsci551_edfs_spark.pipeline import dedup as DD
 from dsci551_edfs_spark.pipeline import similarity as SIM
 from dsci551_edfs_spark.sources.registry import load_table
@@ -142,7 +143,7 @@ def test_single_linkage_lsh_refines_exact(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     exact_lab = {
         r["node"]: r["label"]
-        for r in DD.connected_components(
+        for r in G.connected_components(
             DD.embedding_dup_pairs(emb, threshold=0.4, use_lsh=False).select(
                 "id_a", "id_b"
             )
@@ -150,7 +151,7 @@ def test_single_linkage_lsh_refines_exact(spark, sf_dir):
     }
     lsh_lab = {
         r["node"]: r["label"]
-        for r in DD.connected_components(
+        for r in G.connected_components(
             DD.embedding_dup_pairs(
                 emb, threshold=0.4, use_lsh=True, n_planes=4, n_tables=16
             ).select("id_a", "id_b")
@@ -287,166 +288,132 @@ def test_kmeans_ivf_recall_beats_or_matches_random(spark, sf_dir):
 
 
 def test_connected_components_chain_and_islands(spark):
-    """A 5-node path (needs >1 HashMin round to settle), a 2-clique, and an
-    implicit singleton: labels must be the component minimum."""
-    from dsci551_edfs_spark.pipeline.dedup import connected_components
-
+    """A 5-node path, a 2-clique, and an implicit singleton: labels must
+    be the component minimum."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 10)],
         ["id_a", "id_b"],
     )
     got = {
-        r["node"]: r["label"] for r in connected_components(edges).collect()
+        r["node"]: r["label"] for r in G.connected_components(edges).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_deep_chain_lineage_bounded(spark):
-    """A 40-edge path graph needs ~40 HashMin rounds (the min label walks
-    one hop per round): the per-round localCheckpoint keeps the plan tree
-    from embedding one extra join per iteration, so even a diameter-40
-    run settles in bounded time with the correct single component.
-    The r14 collect-when-small fallback is DISABLED here so the
-    distributed loop itself stays under test."""
-    import time
+def _ref_hops(edges, src):
+    """Plain-Python BFS: {node: hops} over the undirected edge list."""
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    hops = {src: 0} if src in adj else {}
+    frontier = list(hops)
+    while frontier:
+        nxt = []
+        for u in frontier:
+            for v in adj[u]:
+                if v not in hops:
+                    hops[v] = hops[u] + 1
+                    nxt.append(v)
+        frontier = nxt
+    return hops
 
-    from dsci551_edfs_spark.pipeline.dedup import connected_components
 
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], ["id_a", "id_b"]
-    )
-    spark.conf.set("spark.dsci551.ccCollectEdgeThreshold", "0")
-    try:
-        t0 = time.monotonic()
-        got = {
+def _ref_components(edges):
+    """{node: min id of its component} for every id in the edges."""
+    label = {}
+    for n in sorted({x for e in edges for x in e}):
+        if n not in label:
+            label.update(dict.fromkeys(_ref_hops(edges, n), n))
+    return label
+
+
+def _graph_case(name):
+    """(edge list, BFS source) for the kernel equivalence cases."""
+    import random
+
+    if name == "path1024":  # diameter 1023: far past any per-hop loop
+        return [(i, i + 1) for i in range(1023)], 0
+    if name == "path48":  # deeper than BFS's former 40-round truncation
+        return [(i, i + 1) for i in range(47)], 0
+    if name == "random_multigraph":  # repeats, both orientations, self-loops
+        rng = random.Random(7)
+        e = [(rng.randrange(300), rng.randrange(300)) for _ in range(250)]
+        return e + [(b, a) for a, b in e[:20]] + e[20:40], e[0][0]
+    if name == "island":  # nodes 100+ unreachable from the source
+        rng = random.Random(29)
+        e = [(rng.randrange(60), rng.randrange(60)) for _ in range(70)]
+        e += [(100 + rng.randrange(10), 100 + rng.randrange(10)) for _ in range(8)]
+        return e, min(x for t in e for x in t)
+    if name == "selfloop_only":  # 7 appears only in a self-loop
+        return [(1, 2), (2, 3), (7, 7)], 7
+    assert name == "empty"
+    return [], 0
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["path1024", "path48", "random_multigraph", "island", "selfloop_only", "empty"],
+)
+def test_graph_kernels_small_path_equals_distributed(spark, monkeypatch, case):
+    """Both fixpoint kernels give the same exact answer on the driver
+    path (union-find / queue BFS under COLLECT_CAP) and on the
+    distributed loops (star rounds / BSP relaxation, cap forced below
+    every edge count), and both equal a plain-Python reference: the
+    node set is every id in the edges, self-loop-only ids included;
+    unreachable nodes are absent from the hop table; an empty edge set
+    gives empty frames. BFS on the 1024-path needs 1023 rounds, past
+    MAX_ROUNDS, so its distributed run raises instead
+    (test_graph_kernels_raise_at_round_guard)."""
+    edge_list, src = _graph_case(case)
+    edges = spark.createDataFrame(edge_list, "a long, b long")
+
+    def cc():
+        return {
             r["node"]: r["label"]
-            for r in connected_components(edges).collect()
+            for r in G.connected_components(edges, "a", "b").collect()
         }
-    finally:
-        spark.conf.unset("spark.dsci551.ccCollectEdgeThreshold")
-    assert time.monotonic() - t0 < 120
-    assert got == {i: 0 for i in range(41)}
+
+    def hops():
+        return {r["node"]: r["hops"] for r in G.bfs_hops(edges, src).collect()}
+
+    want_cc, want_hops = _ref_components(edge_list), _ref_hops(edge_list, src)
+    assert cc() == want_cc and hops() == want_hops
+    monkeypatch.setattr(G, "COLLECT_CAP", -1)
+    assert cc() == want_cc
+    if case != "path1024":
+        assert hops() == want_hops
 
 
-def test_star_cc_matches_hashmin_on_random_graph(spark):
-    """Alternating large-star/small-star must produce the exact same
-    (node, label) map as HashMin on an arbitrary multigraph with
-    self-loop-free random edges — stars, cliques, chains, singletons."""
-    import random
-
-    from dsci551_edfs_spark.pipeline.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    rng = random.Random(7)
+def test_graph_kernels_raise_at_round_guard(spark, monkeypatch):
+    """A distributed loop with no fixpoint after MAX_ROUNDS raises,
+    naming the kernel, rather than returning a partial labeling or hop
+    table."""
+    monkeypatch.setattr(G, "COLLECT_CAP", 0)
+    monkeypatch.setattr(G, "MAX_ROUNDS", 3)
     edges = spark.createDataFrame(
-        [(rng.randrange(300), rng.randrange(300)) for _ in range(250)],
-        ["id_a", "id_b"],
-    ).filter("id_a != id_b")
-    # compare the two DISTRIBUTED loop algorithms (fallback disabled)
-    spark.conf.set("spark.dsci551.ccCollectEdgeThreshold", "0")
-    try:
-        a = sorted(
-            (r["node"], r["label"])
-            for r in connected_components(edges).collect()
-        )
-        b = sorted(
-            (r["node"], r["label"])
-            for r in connected_components_star(edges).collect()
-        )
-    finally:
-        spark.conf.unset("spark.dsci551.ccCollectEdgeThreshold")
-    assert a == b and len(a) > 0
-
-
-def test_cc_collect_fallback_matches_distributed(spark):
-    """r14 collect-when-small fallback (r13 verdict item 6): under the
-    default threshold the driver union-find must produce EXACTLY the
-    distributed HashMin fixpoint — same (node, min-id-label) rows — on
-    a random multigraph, and the conf'd guard must route big-enough
-    edge sets back to the distributed loop (threshold 0 = always
-    distributed, pinned above; here: tiny threshold forces the loop,
-    default takes the fallback, results identical)."""
-    import random
-
-    from dsci551_edfs_spark.pipeline.dedup import connected_components
-
-    rng = random.Random(13)
-    edges = spark.createDataFrame(
-        [(rng.randrange(200), rng.randrange(200)) for _ in range(180)],
-        ["id_a", "id_b"],
-    ).filter("id_a != id_b")
-    fast = sorted(
-        (r["node"], r["label"])
-        for r in connected_components(edges).collect()
+        [(i, i + 1) for i in range(1023)], "a long, b long"
     )
-    spark.conf.set("spark.dsci551.ccCollectEdgeThreshold", "1")
-    try:
-        slow = sorted(
-            (r["node"], r["label"])
-            for r in connected_components(edges).collect()
-        )
-    finally:
-        spark.conf.unset("spark.dsci551.ccCollectEdgeThreshold")
-    assert fast == slow and len(fast) > 0
+    with pytest.raises(RuntimeError, match="connected_components"):
+        G.connected_components(edges, "a", "b")
+    with pytest.raises(RuntimeError, match="bfs_hops"):
+        G.bfs_hops(edges, 0)
 
 
-def test_bfs_collect_fallback_matches_distributed(spark):
-    """r14: the driver-BFS fallback must equal the distributed BSP
-    frontier relaxation — same (node, hops) rows, reachable nodes only
-    — on a random graph with an unreachable island; same conf guard as
-    the CC fallback."""
-    import random
-
-    from dsci551_edfs_spark.operators.graph import bfs_hops
-
-    rng = random.Random(29)
-    e = [(rng.randrange(60), rng.randrange(60)) for _ in range(70)]
-    e += [(100 + rng.randrange(10), 100 + rng.randrange(10)) for _ in range(8)]
-    edges = spark.createDataFrame(e, ["a", "b"]).filter("a != b")
-    src = min(x for t in e for x in t)
-    fast = sorted(
-        (r["node"], r["hops"]) for r in bfs_hops(edges, src).collect()
-    )
-    spark.conf.set("spark.dsci551.ccCollectEdgeThreshold", "1")
-    try:
-        slow = sorted(
-            (r["node"], r["hops"]) for r in bfs_hops(edges, src).collect()
-        )
-    finally:
-        spark.conf.unset("spark.dsci551.ccCollectEdgeThreshold")
-    assert fast == slow and len(fast) > 0
-    # the island (nodes 100+) must be absent from both
-    assert all(n < 100 for n, _ in fast)
-
-
-def test_star_cc_logarithmic_rounds_on_deep_path(spark):
+def test_star_cc_logarithmic_rounds_on_deep_path(spark, monkeypatch):
     """The O(log d) claim, pinned: a 1024-node path (diameter 1023) must
-    reach the fixpoint within 12 star rounds — HashMin would need ~1023.
-    max_iter raises on non-convergence, so passing max_iter=12 IS the
-    round-count assertion."""
-    from dsci551_edfs_spark.pipeline.dedup import connected_components_star
-
+    reach the fixpoint within 12 star rounds — a per-hop label walk would
+    need ~1023. The round guard raises on non-convergence, so a guard of
+    12 IS the round-count assertion."""
+    monkeypatch.setattr(G, "COLLECT_CAP", 0)
+    monkeypatch.setattr(G, "MAX_ROUNDS", 12)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1023)], ["id_a", "id_b"]
     )
-    spark.conf.set("spark.dsci551.ccCollectEdgeThreshold", "0")
-    try:
-        got = {
-            r["node"]: r["label"]
-            for r in connected_components_star(edges, max_iter=12).collect()
-        }
-    finally:
-        spark.conf.unset("spark.dsci551.ccCollectEdgeThreshold")
+    got = {
+        r["node"]: r["label"] for r in G.connected_components(edges).collect()
+    }
     assert got == {i: 0 for i in range(1024)}
-
-
-def test_star_cc_empty_edges(spark):
-    from dsci551_edfs_spark.pipeline.dedup import connected_components_star
-
-    em = spark.createDataFrame([], "id_a long, id_b long")
-    assert connected_components_star(em).count() == 0
 
 
 def test_dedup_clusters_transitive_and_singletons(spark):

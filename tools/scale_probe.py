@@ -194,6 +194,15 @@ def main() -> None:
     def F_mod5(v):
         return (F.col("doc_id") % 5) == v
 
+    def _distributed(kernel, *args, **kwargs):
+        """Run a graph fixpoint kernel on its distributed loop: a cap
+        below every edge count skips the driver path."""
+        cap, GR.COLLECT_CAP = GR.COLLECT_CAP, -1
+        try:
+            return kernel(*args, **kwargs)
+        finally:
+            GR.COLLECT_CAP = cap
+
     from pyspark.sql import Window
 
     spark = get_spark("scale-probe")
@@ -688,11 +697,11 @@ def main() -> None:
         # round-6 session 2: BFS frontier relaxation with the hot-basket
         # clique growing as (128·K)² edges — rounds stay at the (tiny)
         # eccentricity, so runtime must track the EDGE count, never
-        # rounds × corpus
+        # rounds × corpus. Run on the distributed loop: these edge sets
+        # fit under the driver-path cap
         "bfs_hops_hot_clique": lambda k: (
-            lambda edges: __import__(
-                "dsci551_edfs_spark.operators.graph", fromlist=["bfs_hops"]
-            ).bfs_hops(
+            lambda edges: _distributed(
+                GR.bfs_hops,
                 edges,
                 edges.agg(F.min("pa")).first()[0],
                 a_col="pa",
@@ -715,12 +724,13 @@ def main() -> None:
         ),
         # round-6 session 2: star components on a DEEP path (diameter
         # 4096·k): rounds grow O(log d) ⇒ runtime ~log(k) on top of the
-        # linear edge pass — the shape HashMin would turn into 4096·k
-        # sequential rounds
-        "star_components_chain": lambda k: DD.connected_components_star(
+        # linear edge pass — a per-hop label propagation would need
+        # 4096·k sequential rounds. Distributed loop forced, as above
+        "star_components_chain": lambda k: _distributed(
+            GR.connected_components,
             ev.sparkSession.range(4096 * k - 1).select(
                 F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
-            )
+            ),
         ),
         # round-9 (r8-operator curves). corpus_gate: the fused one-scan
         # quality+lang+fingerprint projection — the clean linear yardstick
